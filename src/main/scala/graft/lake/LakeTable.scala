@@ -577,12 +577,13 @@ final class LakeTable(val root: String, val buckets: Int = 16,
     *
     * @param precomputedWinners optional pre-aggregated LWW winner key
     *   frame `(repo, path, seq)` (one row per surviving key, `seq` =
-    *   winning order value). When given, the merge skips its own
-    *   defensive update-LWW aggregate and derives the touched-file
-    *   set from this small frame instead of re-scanning the updates —
-    *   callers that already computed winners (the engine's
-    *   `materialize=winners` path) avoid whole extra passes over the
-    *   batch.
+    *   winning order value). When given, the merge's key collect is a
+    *   plain select of this small frame instead of an aggregate over
+    *   the updates. The collected keys pick the rewrite files, and
+    *   their smallest seq prunes the existing-side LWW probe to the
+    *   files whose manifest `maxSeq` could beat a winner — none, in a
+    *   seq-ordered replay, so the rewrite files are scanned once, by
+    *   the write.
     */
   def merge(updates: DataFrame, batchId: Long,
             countHint: Option[Long] = None,
@@ -602,13 +603,6 @@ final class LakeTable(val root: String, val buckets: Int = 16,
       .withColumn(OpCol, col("op")).drop("op")
       .withColumn(BucketCol, bucketExpr(col("repo"), b))
 
-    // which FILES does this batch touch? — the distinct update repos
-    // (from the small winner key frame when available) decide both the
-    // touched buckets and, via the manifest's per-file repo ranges,
-    // the exact copy-on-write rewrite set. Collecting distinct repos
-    // is bounded by PruneRepoCap; past the cap (a batch updating >half
-    // a million distinct repos) pruning degrades gracefully to
-    // bucket-granularity CoW.
     val winnersKeyed = precomputedWinners.map(w =>
       w.select(col("repo"), col("path"), col("seq").as(SeqCol)))
 
@@ -657,29 +651,41 @@ final class LakeTable(val root: String, val buckets: Int = 16,
       return committedLineage.getOrElse(Nil)
     }
 
-    val keySrc = winnersKeyed.getOrElse(upd)
-    // one driver-side collect serves two pruning tiers: full (repo,
-    // path) pairs enable PATH-range file skipping inside hot repos
-    // (the Zipf regime, where every file of the hot repo shares
-    // minRepo == maxRepo and repo ranges cannot discriminate); past
-    // PrunePairCap fall back to repo-only, past PruneRepoCap to
-    // bucket-granularity
-    val updPairs: Array[(String, String)] = graft.util.Prof("merge.prune_keys") {
-      val capped = keySrc.select(col("repo"), col("path")).distinct()
-        .limit(PrunePairCap + 1).collect().map(r => (r.getString(0), r.getString(1)))
+    // which FILES does this batch touch? One driver-side collect of the
+    // winner keys (repo, path, seq) serves three pruning tiers:
+    //  - the distinct repos pick the touched buckets and, via the
+    //    manifest's per-file repo ranges, the copy-on-write rewrite set;
+    //  - the (repo, path) pairs add PATH-range file skipping inside hot
+    //    repos (the Zipf regime, where every file of the hot repo shares
+    //    minRepo == maxRepo and repo ranges cannot discriminate);
+    //  - the smallest winner seq prunes the LWW probe (below).
+    // With precomputed winners the collect is a plain select of the
+    // small key frame; otherwise one aggregate of the updates. Past
+    // PrunePairCap keys pruning falls back to repo ranges, past
+    // PruneRepoCap to bucket granularity.
+    val keys = Seq("repo", "path")
+    val keySrc = winnersKeyed.getOrElse(
+      upd.groupBy(keys.map(col): _*).agg(max(col(SeqCol)).as(SeqCol)))
+    val updCount = countHint.getOrElse(upd.count())
+    val updKeys: Array[(String, String, Long)] = graft.util.Prof("merge.prune_keys") {
+      val q = keySrc.select(col("repo"), col("path"), col(SeqCol).cast(LongType))
+      // the row count bounds the key count: under the cap a plain
+      // collect is one job, where a limit takes in scale-up rounds
+      val capped = (if (updCount <= PrunePairCap) q else q.limit(PrunePairCap + 1))
+        .collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
       if (capped.length > PrunePairCap) null else capped
     }
     val updRepos: Array[String] =
-      if (updPairs != null) updPairs.map(_._1).distinct
+      if (updKeys != null) updKeys.map(_._1).distinct
       else {
         val capped = keySrc.select(col("repo")).distinct()
           .limit(PruneRepoCap + 1).collect().map(_.getString(0))
         if (capped.length > PruneRepoCap) null else capped
       }
     val pathsByRepo: Map[String, Array[String]] =
-      if (updPairs == null) Map.empty
-      else updPairs.groupBy(_._1).map { case (r, ps) =>
-        r -> ps.map(_._2).sortWith(ubCompare(_, _) < 0)
+      if (updKeys == null) Map.empty
+      else updKeys.groupBy(_._1).map { case (r, ks) =>
+        r -> ks.map(_._2).sortWith(ubCompare(_, _) < 0)
       }
     val touched: Set[Int] =
       if (updRepos != null) updRepos.map(r => bucketOfRepo(r, b)).toSet
@@ -695,17 +701,18 @@ final class LakeTable(val root: String, val buckets: Int = 16,
         val byBucket = updRepos.groupBy(r => bucketOfRepo(r, b))
           .map { case (k, v) => k -> v.sortWith(ubCompare(_, _) < 0) }
         inTouched.partition(f => rangeIntersects(f, byBucket(f.bucket)) &&
-          (updPairs == null || pathRangeIntersects(f, pathsByRepo)))
+          (updKeys == null || pathRangeIntersects(f, pathsByRepo)))
       }
 
-    val existing =
-      if (rewriteFiles.isEmpty) emptyDf(spark, newSchema)
+    def scan(fs: Seq[DataFileMeta]): DataFrame =
+      if (fs.isEmpty) emptyDf(spark, newSchema)
       else conformTo(
         spark.read
           .schema(internalSchema(oldSchema))
-          .parquet(rewriteFiles.map(f => s"$root/${f.path}"): _*),
+          .parquet(fs.map(f => s"$root/${f.path}"): _*),
         newSchema, Seq(SeqCol, OpCol))
         .withColumn(BucketCol, bucketExpr(col("repo"), b))
+    val existing = scan(rewriteFiles)
 
     // Last-writer-wins over (existing ∪ updates). `seq` is globally
     // unique so the winner is deterministic. Losing delete events
@@ -715,28 +722,42 @@ final class LakeTable(val root: String, val buckets: Int = 16,
     //
     // Physical strategy: a micro-batch is small relative to the table,
     // so the default path never shuffles existing rows at all —
-    //  1. defensively LWW the updates themselves (light agg +
-    //     broadcast winner join; no-op if pre-deduplicated),
-    //  2. for keys present in updates, fetch existing max _seq via a
-    //     broadcast semi-join + small aggregate,
-    //  3. updates win where existing seq is absent or lower,
+    //  1. the winner keys are the collected (repo, path, seq) rows, as
+    //     a local relation: defensively LWW-ed updates (or the caller's
+    //     precomputed winners), broadcast without re-reading a cache;
+    //  2. PROBE: an existing row can only beat a winner if its `_seq`
+    //     is at least the winner's, so only the rewrite files whose
+    //     manifest `maxSeq` is unknown or ≥ the smallest winner seq are
+    //     read, for their max `_seq` per winner key (broadcast
+    //     semi-join + small aggregate). In a seq-ordered replay no file
+    //     qualifies: the probe is an empty relation, and Catalyst drops
+    //     it with its shuffle and broadcasts. Out-of-order batches
+    //     still probe every file that could beat them;
+    //  3. updates win where the probed seq is absent or lower;
     //  4. existing rows whose key has a winning update drop out via a
     //     broadcast anti-join; everything else is untouched and flows
-    //     file-aligned (bucket dirs) straight to the writer.
+    //     file-aligned (bucket dirs) straight to the writer — the one
+    //     scan of the rewrite files.
     // Falls back to the full shuffled max_by aggregate when the
     // update-key set is too large to broadcast.
     val allCols = newSchema.fieldNames.toSeq ++ Seq(SeqCol, OpCol, BucketCol)
-    val keys = Seq("repo", "path")
-    val updCount = countHint.getOrElse(upd.count())
     val winners =
       if (updCount <= BroadcastKeyLimit) {
-        // every driver-side key computation runs over the SMALL winner-
-        // key frame (caller-cached or one pruned aggregate of updates);
-        // the full update rows are scanned exactly once, in the final
-        // join feeding the write
-        val winnerKeys = winnersKeyed.getOrElse(
-          upd.groupBy(keys.map(col): _*).agg(max(col(SeqCol)).as(SeqCol)))
-        val exSeq = existing
+        val winnerKeys =
+          if (updKeys == null) keySrc
+          else spark.createDataFrame(
+            java.util.Arrays.asList(updKeys.map { case (r, p, q) =>
+              org.apache.spark.sql.Row(r, p, q) }: _*),
+            StructType(Seq(StructField("repo", StringType),
+              StructField("path", StringType), StructField(SeqCol, LongType))))
+        val probeFiles =
+          if (updKeys == null || updKeys.isEmpty) rewriteFiles
+          else {
+            val lo = updKeys.iterator.map(_._3).min
+            rewriteFiles.filter(_.maxSeq.forall(_ >= lo))
+          }
+        val probe = if (probeFiles.size == rewriteFiles.size) existing else scan(probeFiles)
+        val exSeq = probe
           .join(broadcast(winnerKeys.select(keys.map(col): _*)), keys, "left_semi")
           .groupBy(keys.map(col): _*)
           .agg(max(col(SeqCol)).as("_ex_seq"))
@@ -1253,7 +1274,7 @@ final class LakeTable(val root: String, val buckets: Int = 16,
               val bucket = p.getParent.getFileName.toString.stripPrefix(s"$BucketCol=").toInt
               val st = FooterStats.repoStats(p)
               DataFileMeta(rel, bucket, st.minRepo, st.maxRepo, st.rows,
-                st.minPath, st.maxPath)
+                st.minPath, st.maxPath, st.maxSeq)
             }
           }: java.util.concurrent.Callable[DataFileMeta]
         }.asJava
@@ -1338,7 +1359,12 @@ object LakeTable {
                                 // multi-repo file's path range spans
                                 // per-repo path spaces)
                                 minPath: Option[String] = None,
-                                maxPath: Option[String] = None)
+                                maxPath: Option[String] = None,
+                                // largest `_seq` in the file: the merge
+                                // skips its LWW probe over files whose
+                                // rows all predate the batch. None =
+                                // unknown (pre-stat manifests), probed
+                                maxSeq: Option[Long] = None)
   final case class LineageEntry(batchId: Long, bucket: Int, filesWritten: Int, snapshotVersion: Long)
 
   /** Pointer to one immutable per-bucket manifest file, with the
@@ -1494,18 +1520,26 @@ object XxHash64Util {
 /** Metadata-only parquet footer reader for manifest stats. */
 object FooterStats {
   final case class RepoStats(rows: Long, minRepo: Option[String], maxRepo: Option[String],
-                             minPath: Option[String] = None, maxPath: Option[String] = None)
+                             minPath: Option[String] = None, maxPath: Option[String] = None,
+                             maxSeq: Option[Long] = None)
 
-  /** min/max of the `repo` AND `path` columns + total row count from
-    * the file's footer (column-chunk statistics; written by parquet-mr
-    * under the UNSIGNED lexicographic order for UTF8 binary). Any
-    * anomaly — missing/empty stats, truncation, unexpected types —
-    * degrades that column to None, which the pruner treats as
-    * "intersects everything".
+  /** One Hadoop configuration for every footer read: building one
+    * parses the default resources, which costs more than the footer
+    * read itself, and a commit reads one footer per file written.
+    * Footer reads never mutate it.
+    */
+  private val conf = new org.apache.hadoop.conf.Configuration()
+
+  /** min/max of the `repo` AND `path` columns, max of `_seq` and the
+    * total row count from the file's footer (column-chunk statistics;
+    * parquet-mr writes UTF8 binary stats under the UNSIGNED
+    * lexicographic order). Any anomaly — missing/empty stats,
+    * truncation, unexpected types — degrades that column to None,
+    * which the pruner treats as "intersects everything" and the merge
+    * as "may hold a newer row".
     */
   def repoStats(p: java.nio.file.Path): RepoStats = {
     try {
-      val conf = new org.apache.hadoop.conf.Configuration()
       val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
         new org.apache.hadoop.fs.Path(p.toUri), conf)
       val reader = org.apache.parquet.hadoop.ParquetFileReader.open(in)
@@ -1515,11 +1549,15 @@ object FooterStats {
         val hi = Array[String](null, null)
         val ok = Array(true, true)
         val names = Array("repo", "path")
+        var seqHi = Long.MinValue
+        var seqOk = true
         reader.getFooter.getBlocks.forEach { blk =>
           rows += blk.getRowCount
           val saw = Array(false, false)
+          var sawSeq = false
           blk.getColumns.forEach { cc =>
-            val i = names.indexOf(cc.getPath.toDotString)
+            val name = cc.getPath.toDotString
+            val i = names.indexOf(name)
             if (i >= 0) {
               saw(i) = true
               val s = cc.getStatistics
@@ -1531,14 +1569,24 @@ object FooterStats {
                   if (hi(i) == null || LakeTable.ubCompare(zs, hi(i)) > 0) hi(i) = zs
                 case _ => ok(i) = false
               }
+            } else if (name == LakeTable.SeqCol) {
+              sawSeq = true
+              val s = cc.getStatistics
+              if (s == null || s.isEmpty || !s.hasNonNullValue) seqOk = false
+              else s.genericGetMax match {
+                case z: java.lang.Long => seqHi = math.max(seqHi, z.longValue)
+                case _ => seqOk = false
+              }
             }
           }
           (0 to 1).foreach(i => if (!saw(i)) ok(i) = false)
+          if (!sawSeq) seqOk = false
         }
         def rng(i: Int): (Option[String], Option[String]) =
           if (ok(i) && lo(i) != null) (Some(lo(i)), Some(hi(i))) else (None, None)
         val (rLo, rHi) = rng(0); val (pLo, pHi) = rng(1)
-        RepoStats(rows, rLo, rHi, pLo, pHi)
+        RepoStats(rows, rLo, rHi, pLo, pHi,
+          if (seqOk && seqHi != Long.MinValue) Some(seqHi) else None)
       } finally reader.close()
     } catch {
       case scala.util.control.NonFatal(_) => RepoStats(-1L, None, None)

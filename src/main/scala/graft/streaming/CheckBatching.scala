@@ -77,18 +77,22 @@ object CheckBatching {
       case d: DecimalType if d.scale == 0 => col(orderCol).cast("long")
       case StringType =>
         // value-level guard: a fractional numeric string would tie
-        // under a truncating cast exactly like a double (and a
-        // non-numeric one would die in a generic ANSI cast error far
-        // from this guard's diagnostic) — route both through the
-        // purpose-built raise instead (r5 review)
-        when(col(orderCol).isNull || col(orderCol).rlike("^-?[0-9]+$"),
+        // under a truncating cast exactly like a double, and a
+        // non-numeric or out-of-range one would die in a generic cast
+        // error (or as a misleading null) far from this guard's
+        // diagnostic — route all three through the purpose-built
+        // raise instead (r5 review)
+        def raise(what: String): Column = raise_error(concat(
+          lit(s"check-batching: order column '$orderCol' has $what ('"),
+          col(orderCol),
+          lit("') — flush boundaries need a total integral order")))
+          .cast("long")
+        val integral = col(orderCol).rlike("^-?[0-9]+$")
+        when(col(orderCol).isNull ||
+            (integral && col(orderCol).try_cast("long").isNotNull),
           col(orderCol).cast("long"))
-          .otherwise(raise_error(concat(
-            lit(s"check-batching: order column '$orderCol' has a " +
-              "non-integral string value ('"),
-            col(orderCol),
-            lit("') — flush boundaries need a total integral order")))
-            .cast("long"))
+          .when(integral, raise("an integral string value outside the 64-bit range"))
+          .otherwise(raise("a non-integral string value"))
       case other => throw new IllegalArgumentException(
         s"check-batching order column '$orderCol' has type " +
           s"${other.simpleString} — fractional or non-orderable values " +

@@ -48,12 +48,12 @@ object Describe {
             f"${s.manifests.map(_.rows).sum}%d")
         }
       case "files" =>
-        println("bucket  rows  repoRange  pathRange  path")
+        println("bucket  rows  maxSeq  repoRange  pathRange  path")
         lake.files().foreach { f =>
           def r(a: Option[String], b: Option[String]) =
             (a, b) match { case (Some(x), Some(y)) => s"[$x..$y]"; case _ => "[?]" }
-          println(f"${f.bucket}%6d  ${f.rows}%4d  ${r(f.minRepo, f.maxRepo)}  " +
-            s"${r(f.minPath, f.maxPath)}  ${f.path}")
+          println(f"${f.bucket}%6d  ${f.rows}%4d  ${f.maxSeq.fold("?")(_.toString)}%6s  " +
+            s"${r(f.minRepo, f.maxRepo)}  ${r(f.minPath, f.maxPath)}  ${f.path}")
         }
       case other => throw new IllegalArgumentException(s"unknown mode $other")
     }

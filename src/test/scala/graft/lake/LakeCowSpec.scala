@@ -1,5 +1,6 @@
 package graft.lake
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -226,5 +227,142 @@ class LakeCowSpec extends SparkTestBase {
       val got = lake.readRepos(spark, Seq(r)).select("content").collect().map(_.getString(0))
       assert(got.toSeq == Seq(s"c-$r"), s"repo $r lost by pruning")
     }
+  }
+
+  /** Spark jobs started by `body`, each flagged by whether any of its
+    * stages scans data files. The listener bus is asynchronous and
+    * FIFO, so the window closes at a sentinel job started after `body`.
+    */
+  private def jobsOf(body: => Unit): Seq[Boolean] = {
+    val sc = spark.sparkContext
+    val sentinel = s"cow-sentinel-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Boolean]()
+    val done = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == sentinel))
+          done.countDown()
+        else if (done.getCount > 0)
+          jobs.add(e.stageInfos.exists(_.rddInfos.exists(_.name == "FileScanRDD")))
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobGroup(sentinel, "close the job window")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(done.await(30, java.util.concurrent.TimeUnit.SECONDS), "listener bus stalled")
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    jobs.asScala.toSeq
+  }
+
+  private def state(lake: LakeTable): Map[(String, String), String] =
+    lake.read(spark).collect()
+      .map(r => (r.getString(0), r.getString(1)) -> r.getString(2)).toMap
+
+  test("seq-ordered merge with precomputed winners: the write is its only data-file scan") {
+    val lake = freshLake()
+    lake.merge(batch(initial), 0L)
+    val upd = batch(Seq("r01", "r03", "r05").zipWithIndex.flatMap { case (r, i) =>
+      (0 until 4).map(p => ((10000 + 10 * i + p).toLong, "upsert", r, f"p${p * 30}%03d", s"v1-$r-$p"))
+    })
+    val rewrites = lake.files().count(f =>
+      LakeTable.rangeIntersects(f, Array("r01", "r03", "r05")))
+    assert(rewrites >= 3, s"premise: several rewrite files, got $rewrites")
+    val jobs = jobsOf {
+      lake.merge(upd, 1L, countHint = Some(12L),
+        precomputedWinners = Some(upd.select("repo", "path", "seq")))
+    }
+    // the two winner-key broadcasts, the updates' shuffle to the write
+    // tasks and the write (the key collect of a local frame runs on the
+    // driver). No LWW probe runs, so the write is the one job that
+    // reads the rewrite files.
+    assert(jobs.count(identity) == 1, s"data-file scans: $jobs")
+    assert(jobs.size == 4, s"jobs: $jobs")
+    val st = state(lake)
+    assert(st.size == initial.size)
+    assert(st(("r03", "p030")) == "v1-r03-1" && st(("r03", "p031")) == "v0-3-31")
+  }
+
+  test("out-of-order batch: a newer row in one rewrite file beats the update, other files skip the probe") {
+    val lake = freshLake()
+    lake.merge(batch(initial), 0L)
+    // r03/p005 becomes newer than the coming update: the file holding
+    // it carries maxSeq 50000, every other file stays below 1000
+    lake.merge(batch(Seq((50000L, "upsert", "r03", "p005", "newer"))), 1L)
+    val upd = batch(Seq(
+      (40000L, "upsert", "r03", "p005", "stale"),
+      (40001L, "upsert", "r02", "p010", "v2-r02"),
+      (40002L, "upsert", "r06", "p090", "v2-r06")))
+    val rewrite = lake.files().filter(f =>
+      LakeTable.rangeIntersects(f, Array("r02", "r03", "r06")) &&
+        LakeTable.pathRangeIntersects(f, Map(
+          "r02" -> Array("p010"), "r03" -> Array("p005"), "r06" -> Array("p090"))))
+    assert(rewrite.forall(_.maxSeq.isDefined))
+    val (probed, skipped) = rewrite.partition(_.maxSeq.get >= 40000L)
+    assert(probed.nonEmpty && skipped.nonEmpty,
+      s"premise: some rewrite files probed, some skipped: $rewrite")
+    lake.merge(upd, 2L, countHint = Some(3L),
+      precomputedWinners = Some(upd.select("repo", "path", "seq")))
+    val st = state(lake)
+    assert(st(("r03", "p005")) == "newer")
+    assert(st(("r02", "p010")) == "v2-r02" && st(("r06", "p090")) == "v2-r06")
+    assert(st.size == initial.size)
+  }
+
+  test("manifest entries without maxSeq (pre-stat manifests) are always probed") {
+    val lake = freshLake()
+    lake.merge(batch(initial), 0L)
+    lake.merge(batch(Seq((50000L, "delete", "r03", "p007", ""))), 1L)
+    // strip maxSeq from every manifest, as written before the stat existed
+    val manifests = java.nio.file.Paths.get(lake.root, "meta", "manifests")
+    val ms = java.nio.file.Files.list(manifests)
+    try ms.forEach { p =>
+      val js = org.json4s.jackson.JsonMethods.parse(java.nio.file.Files.readString(p))
+      java.nio.file.Files.writeString(p, org.json4s.jackson.JsonMethods.compact(
+        js.removeField(_._1 == "maxSeq")))
+    } finally ms.close()
+    val old = new LakeTable(lake.root, buckets = 2, maxRecordsPerFile = 100L)
+    assert(old.files().nonEmpty && old.files().forall(_.maxSeq.isEmpty))
+    // lower than the tombstone, higher than the rest: only an unknown
+    // maxSeq keeps the tombstone's file in the probe
+    old.merge(batch(Seq(
+      (40000L, "upsert", "r03", "p007", "stale"),
+      (40001L, "upsert", "r03", "p008", "v2"))), 2L)
+    val st = state(old)
+    assert(!st.contains(("r03", "p007")), "lower-seq upsert resurrected a tombstone")
+    assert(st(("r03", "p008")) == "v2" && st.size == initial.size - 1)
+    // rewritten files gain the stat; untouched ones keep it unknown
+    val after = old.files()
+    assert(after.exists(_.maxSeq.contains(50000L)) && after.exists(_.maxSeq.isEmpty))
+    // Describe prints the stat, `?` where a manifest lacks it
+    val out = new java.io.ByteArrayOutputStream()
+    Console.withOut(out)(graft.tools.Describe.main(Array(old.root, "files")))
+    val rows = out.toString("UTF-8").linesIterator.drop(1)
+      .map(_.trim.split("\\s+")(2)).toSeq
+    assert(rows.size == after.size && rows.contains("50000") && rows.contains("?"), rows)
+  }
+
+  test("every data file of a replayed lake records its max _seq in the manifest") {
+    import graft.engine.CdcEngine
+    import graft.gen.EventLogGen
+    val log = tmpDir("seqlog")
+    EventLogGen.writeLog(spark, EventLogGen.GenConfig(seed = 7L, events = 4000L,
+      repos = 10, pathsPerRepo = 50, rowsPerFile = 500L), log)
+    val lake = CdcEngine.replayToEnd(spark, CdcEngine.ReplayConfig(log,
+      tmpDir("seqlake"), tmpDir("seqckpt"), maxFilesPerTrigger = Some(2),
+      lakeMaxRecordsPerFile = 200L))
+    def check(): Unit = {
+      val files = lake.files()
+      assert(files.size > 4, s"premise: several data files, got ${files.size}")
+      files.foreach { f =>
+        val actual = spark.read.parquet(s"${lake.root}/${f.path}")
+          .agg(max(col(LakeTable.SeqCol))).head.getLong(0)
+        assert(f.maxSeq.contains(actual), s"$f: max _seq is $actual")
+      }
+    }
+    check()
+    assert(lake.compact(spark, 0).nonEmpty)
+    check()
   }
 }

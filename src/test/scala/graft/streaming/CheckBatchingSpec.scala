@@ -109,6 +109,20 @@ class CheckBatchingSpec extends SparkTestBase {
     def msgs(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(x => Option(x.getMessage).toSeq ++ msgs(x.getCause))
     assert(msgs(e3).exists(_.contains("non-integral string")))
+    // integral strings past the 64-bit range hit the same raise, not a
+    // generic cast overflow or a misleading "null" error; the range's
+    // ends still order
+    Seq("9223372036854775808", "-9223372036854775809", "1" * 20).foreach { big =>
+      val e4 = intercept[Exception](CheckBatching.withBatchIds(
+        Seq(("a", "1"), ("b", big)).toDF("v", "s"), "this.v", orderCol = "s").collect())
+      assert(msgs(e4).exists(_.contains("outside the 64-bit range")), s"$big: ${msgs(e4)}")
+    }
+    val ends = CheckBatching.withBatchIds(
+        Seq(("FLUSH", "-9223372036854775808"), ("b", "9223372036854775807")).toDF("v", "s"),
+        """this.v == "FLUSH"""", orderCol = "s")
+      .select("v", CheckBatching.BatchCol).collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(ends == Map("FLUSH" -> 0L, "b" -> 1L))
     val withNull = Seq(("a", java.lang.Long.valueOf(1L)), ("b", null))
       .toDF("v", "seq")
     intercept[Exception](
